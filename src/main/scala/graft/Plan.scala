@@ -17,6 +17,8 @@ object Plan {
       .config("spark.sql.codegen.maxFields", sys.env.getOrElse("MAXF", "100"))
       .config("spark.sql.codegen.hugeMethodLimit", sys.env.getOrElse("HML", "8000"))
       .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("WSCG", "true"))
+      // Bench's rule set, so a dump shows the plan Bench times
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

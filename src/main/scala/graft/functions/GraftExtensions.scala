@@ -6,7 +6,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** SQL registration for the native expressions, two ways:
+/** The engine's session hook. Besides the native expressions it
+  * installs the planner strategies and optimizer rules below and, for
+  * the whole JVM, a codegen class cache sized to the engine's working
+  * set (`GraftSqlBridge.sizeCodegenCache`).
+  *
+  * SQL registration for the native expressions, two ways:
   *
   *  - cluster-wide: `spark.sql.extensions=graft.functions.GraftExtensions`
   *    (the standard SparkSessionExtensions hook — survives session
@@ -31,6 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.BarrierPushdown)
     // bbox → geohash partition pruning on ghash<p>-partitioned lakes
     ext.injectOptimizerRule(_ => graft.plans.GeohashPruning)
+    // generated-class cache sized to the engine's working set, so
+    // repeated plans reuse compiled classes instead of recompiling them
+    org.apache.spark.sql.GraftSqlBridge.sizeCodegenCache()
   }
 }
 

@@ -57,4 +57,30 @@ object GraftSqlBridge {
     if (!exp.extraOptimizations.contains(r))
       exp.extraOptimizations = exp.extraOptimizations :+ r
   }
+
+  /** Entries in Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+    * Sized from the engine's measured working set (4-core host, one
+    * perfbench run each): `serve_mix` compiles 223 distinct classes,
+    * about 340 cache entries once the copy compiled under the
+    * executor's class loader is counted (the cache key includes the
+    * loader); `corpus_curate` compiles 185. One delta batch alone needs
+    * 134, so at 100 entries about 80% of a serving run's 1,084 Janino
+    * compiles rebuilt byte-identical code. 1000 leaves about 3×
+    * headroom over the largest working set. */
+  val CodegenCacheEntries = 1000
+
+  /** Default the codegen cache size on `conf`; a value the user set
+    * explicitly (builder `.config`, `--conf`, `-Dspark.…`) wins. */
+  def sizeCodegenCache(conf: org.apache.spark.SparkConf): Unit =
+    conf.setIfMissing(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      CodegenCacheEntries.toString)
+
+  /** [[sizeCodegenCache]] on the running SparkContext's conf. Effective
+    * when called from a session extension: the session's SharedState
+    * copies that conf after the extensions are applied, and
+    * `CodeGenerator` reads the static size once, on first use. */
+  def sizeCodegenCache(): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(sc => sizeCodegenCache(sc.conf))
 }
